@@ -98,10 +98,7 @@ object Bench {
     // input; dropping those blocks between queries keeps one query's
     // cache from GC-pressuring the next (r1: a 28 s q_fact_assembly
     // anomaly right after the biggest persisting query).
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    def clearState(): Unit = CacheReleases.clearSession(spark)
 
     // Fixed-work CPU probe: the host has documented steal stalls, and a
     // single graded bench run can land in one. The probe times an

@@ -28,8 +28,7 @@ object Verify {
       }
       // drop persisted blocks between queries (several dedup queries
       // persist() their self-joined input and can't unpersist lazily)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      CacheReleases.clearSession(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expressions for the vector hot path.
   *
@@ -485,25 +482,46 @@ object VectorExpressions {
   case class LloydAssignMulti(left: Expression, right: Expression)
       extends BinaryExpression {
     override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-      // full 3-level shape match (round-14 ADVICE): a wrongly nested
-      // literal (array<array<double>>) or an empty outer array used to
-      // pass analysis and fail at runtime inside the lazy books
-      // extraction with a ClassCastException
+      // full 3-level shape match plus the literal's contents (round-14
+      // ADVICE): a wrongly nested literal, an empty subspace, or empty
+      // or ragged codewords used to pass analysis and fail at runtime
+      // inside the lazy books extraction (ClassCastException, or an
+      // index error at books(0)(0).length)
       case ArrayType(LongType, _) if right.foldable &&
           (right.dataType match {
             case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
             case _ => false
           }) =>
-        val outer = right.eval(null).asInstanceOf[ArrayData]
-        if (outer == null || outer.numElements() == 0)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName: codebook literal must be non-empty")
-        else TypeCheckResult.TypeCheckSuccess
+        codebookError(right.eval(null).asInstanceOf[ArrayData]) match {
+          case Some(msg) => TypeCheckResult.TypeCheckFailure(s"$prettyName: $msg")
+          case None => TypeCheckResult.TypeCheckSuccess
+        }
       case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName expects (array<bigint>, foldable array<array<array<double>>>)")
     }
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "graft_lloyd_assign_multi"
+
+    /** What the kernel needs of the codebook literal: at least one
+      * subspace, no null or empty subspace, and codewords that are
+      * non-null, non-empty and all of one length (`sub`). */
+    private def codebookError(ms: ArrayData): Option[String] = {
+      def arrays(a: ArrayData): Seq[ArrayData] =
+        (0 until a.numElements()).map(i => if (a.isNullAt(i)) null else a.getArray(i))
+      if (ms == null || ms.numElements() == 0) Some("codebook literal must be non-empty")
+      else {
+        val subspaces = arrays(ms)
+        if (subspaces.exists(ks => ks == null || ks.numElements() == 0))
+          Some("every codebook subspace must be non-empty")
+        else {
+          val lengths = subspaces.flatMap(arrays)
+            .map(c => if (c == null) 0 else c.numElements()).distinct
+          if (lengths.length != 1 || lengths.head == 0)
+            Some(s"codewords must be non-empty and of one length, got lengths ${lengths.mkString(",")}")
+          else None
+        }
+      }
+    }
 
     @transient private lazy val books: Array[Array[Array[Double]]] = {
       val ms = right.eval(null).asInstanceOf[ArrayData]
@@ -674,32 +692,5 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** Idempotent session-level registration; `call_function` then makes
-    * the expressions usable from the Column API without depending on
-    * version-specific Column internals. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def regN(name: String, arity: Int, build: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.registerFunction(
-          id,
-          new ExpressionInfo(VectorExpressions.getClass.getCanonicalName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == arity, s"$name expects $arity arguments")
-            build(exprs)
-          })
-      }
-    }
-    regN("graft_dot", 2, es => ArrayDotProduct(es(0), es(1)))
-    regN("graft_scale_div", 2, es => ArrayScaleDivide(es(0), es(1)))
-    regN("graft_quantize", 1, es => QuantizeStats(es(0)))
-    regN("graft_lloyd_assign", 2, es => LloydAssignCentroids(es(0), es(1)))
-    regN("graft_lloyd_scores", 2, es => LloydScoresCentroids(es(0), es(1)))
-    regN("graft_lloyd_assign_multi", 2, es => LloydAssignMulti(es(0), es(1)))
-    regN("graft_quantize1000", 1, es => Quantize1000(es(0)))
-    regN("graft_pq_adc_table", 2, es => PqAdcTableExpr(es(0), es(1)))
   }
 }

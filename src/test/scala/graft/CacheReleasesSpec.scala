@@ -23,6 +23,18 @@ class CacheReleasesSpec extends SparkSpec {
       "releaseAll must drop every registered persist")
   }
 
+  test("the harness clear drains the release queue") {
+    clearAll()
+    val df = SparkEntry.queries("q_lm_perplexity")(spark, dir)
+    df.write.mode("overwrite").format("noop").save()
+    assert(CacheReleases.pending > 0,
+      "sanity: the builder should have registered its shared frames")
+    CacheReleases.clearSession(spark) // Bench/Verify between queries
+    assert(CacheReleases.pending === 0,
+      "the harness clear must not leave frames referenced in the queue")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("q_cms_heavy_hitters leaves no persistent RDDs behind") {
     clearAll()
     val df = SparkEntry.queries("q_cms_heavy_hitters")(spark, dir)

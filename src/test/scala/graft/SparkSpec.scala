@@ -23,9 +23,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorExpressions.register(s)
-    graft.functions.TextExpressions.register(s)
-    graft.functions.BloomFunctions.register(s)
+    graft.functions.GraftExtensions.register(s)
     s
   }
 }

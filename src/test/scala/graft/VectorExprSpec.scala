@@ -1,7 +1,10 @@
 package graft
 
-import graft.functions.VectorExpressions
+import graft.functions.GraftExtensions
 import graft.ops.VectorOps
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 /** Native Catalyst vector expressions: registration, bit-parity with
@@ -20,7 +23,7 @@ class VectorExprSpec extends SparkSpec {
   ).toDF("id", "vf", "vd")
 
   test("graft_dot is bit-identical to the unrolled built-in form") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = df
       .withColumn("vfd", VectorOps.toDoublesUnrolled(col("vf"), dims))
       .withColumn("native", VectorOps.dotNative(col("vfd"), col("vd")))
@@ -33,7 +36,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_dot widens float arrays exactly (no pre-cast needed)") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = df
       .withColumn("direct", VectorOps.dotNative(col("vf"), col("vd")))
       .withColumn("viaCast", VectorOps.dotNative(
@@ -46,7 +49,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("withNormalizedNative matches withNormalized bitwise") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val a = VectorOps.withNormalizedNative(df, "vf", "vn")
       .select("id", "vn").as[(Long, Array[Double])].collect().toMap
     val b = VectorOps.withNormalized(df, "vf", "vn", dims)
@@ -61,7 +64,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null array input yields null, not a crash") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = Seq((1L, Option.empty[Array[Double]], Array(1.0, 2.0)))
       .toDF("id", "a", "b")
       .withColumn("dot", VectorOps.dotNative(col("a"), col("b")))
@@ -72,7 +75,7 @@ class VectorExprSpec extends SparkSpec {
   test("expressions run inside whole-stage codegen") {
     // a parquet scan, not a local Seq: ConvertToLocalRelation folds
     // in-memory inputs away before any physical plan exists
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plan = VectorOps.withNormalizedNative(e, "embedding", "vn")
       .withColumn("dot", VectorOps.dotNative(col("vn"), col("vn")))
@@ -87,24 +90,56 @@ class VectorExprSpec extends SparkSpec {
     // spark.sql.extensions=graft.functions.GraftExtensions
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.functions.GraftExtensions().apply(ext)
-    // full parity with TextExpressions.register + VectorExpressions
-    // .register + BloomFunctions: an extensions-only session (no
-    // Tables.ensureConf) must resolve every function the query layer
-    // calls by name — graft_capped_roster especially, or every
-    // ClassGuard-guarded dedup query fails analysis (ADVICE r8).
-    assert(org.apache.spark.sql.GraftExtensionsBridge.injectedNames(ext)
-      === Set("graft_dot", "graft_scale_div", "graft_quantize",
-        "graft_quantize1000", "graft_lloyd_assign", "graft_lloyd_scores",
-        "graft_lloyd_assign_multi", "graft_pq_adc_table",
-        "graft_minhash", "graft_shingle_hashes", "graft_shingle_hashes_ne",
-        "graft_word_hashes60",
-        "graft_simhash60", "graft_nfc", "graft_sampled_substrings",
-        "graft_jaro_winkler", "graft_pair_overlap", "graft_capped_roster",
-        "graft_bloom_agg", "graft_bloom_contains", "graft_bloom_sharded"))
+    // an extensions-only session (no Tables.ensureConf) must resolve
+    // every function the query layer calls by name — graft_capped_roster
+    // especially, or every ClassGuard-guarded dedup query fails
+    // analysis (ADVICE r8).
+    val names = Set("graft_dot", "graft_scale_div", "graft_quantize",
+      "graft_quantize1000", "graft_lloyd_assign", "graft_lloyd_scores",
+      "graft_lloyd_assign_multi", "graft_pq_adc_table",
+      "graft_minhash", "graft_shingle_hashes", "graft_shingle_hashes_ne",
+      "graft_word_hashes60",
+      "graft_simhash60", "graft_nfc", "graft_sampled_substrings",
+      "graft_jaro_winkler", "graft_pair_overlap", "graft_capped_roster",
+      "graft_bloom_agg", "graft_bloom_contains", "graft_bloom_sharded")
+    assert(org.apache.spark.sql.GraftExtensionsBridge.injectedNames(ext) === names)
+    // the in-process path (Tables.ensureConf) resolves the same set
+    GraftExtensions.register(spark)
+    val sessionReg = spark.sessionState.functionRegistry
+    names.foreach(n => assert(sessionReg.functionExists(FunctionIdentifier(n)), n))
+    // and both paths reject a wrong argument count with one message
+    def arityError(reg: FunctionRegistry): String =
+      intercept[IllegalArgumentException](
+        reg.lookupFunction(FunctionIdentifier("graft_dot"), Seq(Literal(1.0)))
+      ).getMessage
+    val viaExtensions =
+      arityError(org.apache.spark.sql.GraftExtensionsBridge.registry(ext))
+    assert(viaExtensions.contains("graft_dot takes 2 argument(s), got 1"))
+    assert(arityError(sessionReg) === viaExtensions)
+  }
+
+  test("graft_lloyd_assign_multi rejects malformed codebook literals at analysis") {
+    GraftExtensions.register(spark)
+    def assign(books: Seq[Seq[Seq[Double]]]) =
+      spark.range(1).select(call_function("graft_lloyd_assign_multi",
+        typedLit(Seq(1L, 2L)), typedLit(books)))
+    val bad = Seq(
+      "empty outer array" -> Seq.empty[Seq[Seq[Double]]],
+      "empty subspace" -> Seq(Seq(Seq(1.0, 2.0)), Seq.empty[Seq[Double]]),
+      "empty codeword" -> Seq(Seq(Seq.empty[Double])),
+      "ragged codewords" -> Seq(Seq(Seq(1.0, 2.0), Seq(1.0))),
+      "ragged across subspaces" -> Seq(Seq(Seq(1.0)), Seq(Seq(1.0, 2.0))))
+    bad.foreach { case (what, books) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](assign(books))
+      assert(e.getMessage.contains("graft_lloyd_assign_multi: "), what)
+    }
+    // a well-formed literal still runs: M = 2 subspaces of sub = 1
+    assert(assign(Seq(Seq(Seq(0.0), Seq(1.5)), Seq(Seq(1.0), Seq(5.0))))
+      .head().getSeq[Int](0) === Seq(1, 0))
   }
 
   test("SQL surface works after registration") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     df.createOrReplaceTempView("vec_test")
     val r = spark.sql(
       "SELECT graft_dot(vd, vd) AS d FROM vec_test WHERE id = 2")

@@ -19,10 +19,7 @@ object BenchSome {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    def clearState(): Unit = graft.CacheReleases.clearSession(spark)
     def runFully(name: String): Unit =
       graft.SparkEntry.queries(name)(spark, dir)
         .write.mode("overwrite").format("noop").save()

@@ -6,10 +6,14 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
   * private[sql], so the spec asserting that GraftExtensions actually
   * injects its functions reaches it from this package. */
 object GraftExtensionsBridge {
-  def injectedNames(ext: SparkSessionExtensions): Set[String] = {
+  /** The builtin registry plus every function `ext` injects. */
+  def registry(ext: SparkSessionExtensions): FunctionRegistry = {
     val reg = FunctionRegistry.builtin.clone()
-    val before = reg.listFunction().map(_.funcName).toSet
     ext.registerFunctions(reg)
-    reg.listFunction().map(_.funcName).toSet -- before
+    reg
   }
+
+  def injectedNames(ext: SparkSessionExtensions): Set[String] =
+    registry(ext).listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
 }
