@@ -10,6 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * boto3 S3 listing onto the Hadoop FileSystem API so it works on any
   * Hadoop-compatible store.
   *
+  * The measuring write is unpartitioned: `initialPartitions`
+  * round-robin files, not one file per (task, partition value) as the
+  * reference's partitioned temp write (etl2:285) makes. That is ~10
+  * files to create, list and read back instead of ~10 × #values. The
+  * measured bytes therefore include the partition columns and carry
+  * fewer footers than a partitioned layout would — close enough for a
+  * 128 MB-granular file count. The final write keeps `partitionBy`,
+  * so the layout the caller sees is unchanged.
+  *
   * Scale note: on Spark 3/4 the same goal is often better served by
   * AQE + `spark.sql.files.maxRecordsPerFile`, which avoids the second
   * write entirely; this operator reproduces the reference's explicit
@@ -44,15 +53,14 @@ object SizedWrite {
     if (bytes < MinSingleFileBytes) 1
     else math.min(MaxFiles, math.max(1, math.ceil(bytes.toDouble / TargetFileBytes).toInt))
 
-  /** Write df to `tempPath`, measure, rewrite compacted to `finalPath`,
-    * delete the temp (etl2:285,301-331). */
+  /** Write df unpartitioned to `tempPath`, measure, rewrite compacted
+    * (and partitioned by `partitionCols`) to `finalPath`, delete the
+    * temp (etl2:285,301-331). */
   def writeSized(
       df: DataFrame, tempPath: String, finalPath: String,
       partitionCols: Seq[String] = Nil, initialPartitions: Int = 10): Unit = {
     val spark = df.sparkSession
-    val w0 = df.repartition(initialPartitions).write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0)
-      .parquet(tempPath)
+    df.repartition(initialPartitions).write.mode("overwrite").parquet(tempPath)
     val n = optimalPartitions(dataBytes(spark, tempPath))
     val back = spark.read.parquet(tempPath).coalesce(n)
     val w1 = back.write.mode("overwrite")

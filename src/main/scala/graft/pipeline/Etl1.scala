@@ -16,7 +16,15 @@ import org.apache.spark.sql.functions._
   *  - callers can pass an explicit schema instead of inferSchema's
   *    extra full scan (etl1:59);
   *  - no eager count() actions between plan stages (etl1:60,139
-  *    execute the lineage twice for logging).
+  *    execute the lineage twice for logging);
+  *  - row-local work before the dedup: cleanup, repair, parsing and
+  *    normalization run in the scan tasks, ahead of the newest-wins
+  *    window (etl1 runs them after it; see `stage` for why the
+  *    result is identical);
+  *  - one file per stage partition: `run` hash-partitions on
+  *    (year, month) before the partitioned write, so each `year=/month=`
+  *    directory is written by exactly one task and the tasks run in
+  *    parallel (etl1:145 writes whatever partitioning the plan left).
   */
 object Etl1 {
   val OfficePattern = "(?i)^(RTA|UNIT OFFICE|MVI|DTO|ZONAL|TRANSPORT).*"
@@ -25,45 +33,55 @@ object Etl1 {
   val ElectricPattern = "\\b(ev|bov|electric|hybrid)\\b"
 
   /** Multi-format date parse (etl1:32-53): strip junk, unify
-    * separators, dispatch on shape, else null.
+    * separators, dispatch on shape, else null. `try_to_date` is
+    * `to_date` with ANSI errors off, the engine's pinned mode; it
+    * matters under ANSI because `stage` parses every raw row, including
+    * duplicates that lose the dedup with shape-valid but impossible
+    * dates such as 00/00/0000.
     *
-    * Round-11 negative probe (P31, sf1, interleaved): replacing the
+    * Round-11 negative probe (P31, sf1, interleaved, measured when
+    * this projection still ran after the dedup window): replacing the
     * guarded to_date branches with substring→cast→make_date integer
     * arithmetic — semantics-identical for valid post-1582 dates —
     * measured ~2× SLOWER (11.2 vs 6.3 s stage wall), with or without
-    * hand-CSE'd `cleaned` columns; the extra expressions push the
-    * already-wide stage projection out of whole-stage codegen. The
-    * LEGACY to_date chain here is ~160 ns/row post-regex and is the
-    * measured floor — don't "optimize" it again without an A/B. */
+    * hand-CSE'd `cleaned` columns; the extra expressions pushed the
+    * wide stage projection out of whole-stage codegen. The projection
+    * now runs in the scan tasks, before the window, but is just as
+    * wide, so the LEGACY to_date chain (~160 ns/row post-regex then)
+    * stays — don't swap it for the integer form without a new A/B. */
   private def parseDate(c: org.apache.spark.sql.Column) = {
     val cleaned = regexp_replace(
       trim(regexp_replace(c.cast("string"), "[^\\d/.\\-]", "")),
       "[\\.\\-]", "/")
-    when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{4}$"), to_date(cleaned, "dd/MM/yyyy"))
-      .when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{2}$"), to_date(cleaned, "dd/MM/yy"))
-      .when(cleaned.rlike("^\\d{4}/\\d{2}/\\d{2}$"), to_date(cleaned, "yyyy/MM/dd"))
+    when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{4}$"), try_to_date(cleaned, "dd/MM/yyyy"))
+      .when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{2}$"), try_to_date(cleaned, "dd/MM/yy"))
+      .when(cleaned.rlike("^\\d{4}/\\d{2}/\\d{2}$"), try_to_date(cleaned, "yyyy/MM/dd"))
       .otherwise(lit(null).cast("date"))
   }
 
   /** Raw rows → stage rows. Input needs the raw RTA columns
     * (tempRegistrationNumber, fromdate, todate, OfficeCd, makerName,
-    * modelDesc, fuel, makeYear, ...); extra columns pass through. */
+    * modelDesc, fuel, makeYear, ...); extra columns pass through.
+    *
+    * Every row-local step runs before the dedup window, so it executes
+    * in the scan tasks rather than behind the window's shuffle (which
+    * AQE may coalesce into one task). That is exact: the window
+    * partitions on tempRegistrationNumber and orders on the RAW
+    * fromdate (a private copy, taken before the repair rewrites it),
+    * todate and slno, none of which a row-local step changes. The
+    * validity gate stays after the dedup: a registration whose newest
+    * raw row loses its fromdate to the repair is dropped, not replaced
+    * by an older row. */
   def stage(raw: DataFrame): DataFrame = {
-    // maker cleanup (etl1:66 — trailing backslash/dot/comma)
-    val cleaned = raw.withColumn("makerName",
-      regexp_replace(col("makerName"), "[\\\\.,]+$", ""))
-
-    // newest-wins dedup per registration on the RAW fromdate string
-    // (etl1:68-70), with deterministic tiebreaks added
-    val w = Window.partitionBy("tempRegistrationNumber")
-      .orderBy(col("fromdate").desc, col("todate").desc, col("slno").asc)
-    val deduped = cleaned
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    // raw fromdate kept for the dedup order; maker cleanup (etl1:66 —
+    // trailing backslash/dot/comma)
+    val cleaned = raw
+      .withColumn("__fromdate_raw", col("fromdate"))
+      .withColumn("makerName", regexp_replace(col("makerName"), "[\\\\.,]+$", ""))
 
     // OfficeCd misalignment repair, three sequential steps (etl1:76-94)
     val officeLike = col("fromdate").cast("string").rlike(OfficePattern)
-    val repaired = deduped
+    val repaired = cleaned
       .withColumn("OfficeCd",
         when(officeLike && col("OfficeCd").isNull, col("fromdate"))
           .otherwise(col("OfficeCd")))
@@ -117,15 +135,31 @@ object Etl1 {
           .otherwise(col("makeYear")))
       .drop("makeYear_inferred")
 
-    // partition columns + validity gate (etl1:136-137)
+    // newest-wins dedup per registration on the RAW fromdate string
+    // (etl1:68-70), with deterministic tiebreaks added; then the
+    // partition-column validity gate (etl1:136-137)
+    val w = Window.partitionBy("tempRegistrationNumber")
+      .orderBy(col("__fromdate_raw").desc, col("todate").desc, col("slno").asc)
     typed
       .withColumn("year", year(col("fromdate_parsed")))
       .withColumn("month", month(col("fromdate_parsed")))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn", "__fromdate_raw")
       .filter(col("fromdate_parsed").isNotNull &&
         col("year").isNotNull && col("month").isNotNull)
   }
 
-  /** CSV in → partitioned stage Parquet out (etl1:59,145). */
+  /** CSV in → partitioned stage Parquet out (etl1:59,145).
+    *
+    * The write is hash-partitioned on (year, month) into
+    * `defaultParallelism` tasks: every `year=/month=` directory gets
+    * exactly one file, written by one task, and the tasks run in
+    * parallel. The explicit count keeps AQE from coalescing the small
+    * dedup output back into a single writer task. Trade-off: a whole
+    * month lands in one task — right for monthly RTA extracts, wrong
+    * for a multi-TB month, which would want a salted or
+    * `maxRecordsPerFile`-bounded write instead. Only `run` does this;
+    * `stage` stays a plain plan for the star-schema queries. */
   def run(spark: SparkSession, inputPath: String, stagePath: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
@@ -134,7 +168,9 @@ object Etl1 {
       case Some(s) => reader.schema(s).csv(inputPath)
       case None    => reader.option("inferSchema", true).csv(inputPath)
     }
-    stage(raw).write.mode("overwrite")
+    stage(raw)
+      .repartition(spark.sparkContext.defaultParallelism, col("year"), col("month"))
+      .write.mode("overwrite")
       .partitionBy("year", "month").parquet(stagePath)
   }
 }

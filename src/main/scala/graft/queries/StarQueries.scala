@@ -82,7 +82,7 @@ object StarQueries {
         .otherwise((k % 9).cast("int")).as("seatCapacity"))
     // duplicate registrations: '00/00/0000' sorts lexicographically
     // below every real dd/MM/yyyy string, so the main row always wins
-    // the newest-wins window and the dup's junk never reaches parsing
+    // the newest-wins window and the dup's junk never reaches the stage
     val dups = o.filter(k % 7 === 0).select(
       concat(lit("TR"), k.cast("string")).as("tempRegistrationNumber"),
       (k + 100000000L).as("slno"),
@@ -106,8 +106,9 @@ object StarQueries {
     spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
     // persist the keyed stage and dim_vehicle, as Etl2.run does: the
     // resolution cascade + fact assembly consume the stage lineage
-    // ~6x (dfForMatch, dvLookup, manRes, fact, exact, residue) and
-    // re-deriving Etl1.stage's window + repairs per consumer measured
+    // ~6x (dfForMatch, dvLookup, manRes, fact, exact, residue), and
+    // re-deriving all of Etl1.stage per consumer (row-local repairs
+    // and parsing, the dedup window's shuffle and sort) measured
     // 13 s vs ~3 s cached at sf0.1. (Round-11 note: a localCheckpoint
     // swap measured FASTER to materialize — P31, 5.9 vs 8 s at sf1 —
     // but slower end-to-end: six consumers re-read this frame, and
@@ -138,8 +139,10 @@ object StarQueries {
   }
 
   /** The raw→stage→keyed mirror as DuckDB CTEs (shared by both
-    * oracles). Every step mirrors one Etl1/Etl2 transformation in
-    * order; see the Scaladoc above for the branch inventory. */
+    * oracles). Every step mirrors one Etl1/Etl2 transformation, in
+    * the reference's order (dedup before repair; Etl1.stage repairs
+    * first with the same result); see the Scaladoc above for the
+    * branch inventory. */
   private val sqlStageCtes: String = """
     main AS (
       SELECT 'TR' || CAST(o_orderkey AS VARCHAR) AS reg,

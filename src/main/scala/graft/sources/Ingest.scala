@@ -3,10 +3,10 @@ package graft.sources
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1: dataset ingest from a metastore-style API
   * (extraction_to_local.py:6-47): GET the dataset metadata JSON, walk
@@ -68,20 +68,26 @@ object Ingest {
     * hdfs://, s3a:// alike). Returns the receipt as a DataFrame
     * (filename, n_bytes) — an auditable manifest instead of the
     * reference's print statements. Partition count = plan size so each
-    * file transfers independently. */
+    * file transfers independently.
+    *
+    * Executors write with the session's Hadoop configuration
+    * (`spark.hadoop.*`, session-set `fs.*` keys, store credentials),
+    * broadcast once; `destDir` is created once, before any task runs. */
   def fetchTo(spark: SparkSession, plan: Seq[Download], destDir: String,
       fetch: Fetch): DataFrame = {
     import spark.implicits._
     require(plan.map(_.filename).distinct.size == plan.size,
       "download plan has duplicate target filenames")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val dir = new Path(destDir)
+    dir.getFileSystem(hadoopConf).mkdirs(dir)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     val n = math.max(1, plan.size)
     val received = spark.createDataset(plan).repartition(n)
       .mapPartitions { it =>
+        val fs = dir.getFileSystem(conf.value.value)
         it.map { d =>
           val bytes = fetch(d.url)
-          val dir = new Path(destDir)
-          val fs = dir.getFileSystem(new Configuration())
-          fs.mkdirs(dir)
           val out = fs.create(new Path(dir, d.filename), true)
           try out.write(bytes) finally out.close()
           (d.filename, bytes.length.toLong)

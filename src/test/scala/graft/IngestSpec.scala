@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.RawLocalFileSystem
 
 import graft.sources.Ingest
 
@@ -47,6 +50,24 @@ class IngestSpec extends SparkSpec {
     manifest.unpersist()
   }
 
+  test("ingest: executors write with the session's Hadoop configuration") {
+    // the scheme's implementation is known only to this session's conf,
+    // not to a fresh Hadoop Configuration; uncached, so the instance
+    // fetchTo creates for `mkdirs` cannot answer the executors' lookups
+    // (local mode shares one JVM-wide FileSystem cache)
+    val impl = s"fs.${SessionOnlyFileSystem.Scheme}.impl"
+    val keys = Map(impl -> classOf[SessionOnlyFileSystem].getName,
+      s"$impl.disable.cache" -> "true")
+    val dest = Files.createTempDirectory("graft-ingest-conf").toString
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      Ingest.ingest(spark, metadata,
+        s"${SessionOnlyFileSystem.Scheme}://$dest/landing", fetch).unpersist()
+    } finally keys.keys.foreach(spark.conf.unset)
+    assert(new String(Files.readAllBytes(Paths.get(dest, "landing",
+      "transport_2023-01.csv")), StandardCharsets.UTF_8) === "jan,rows")
+  }
+
   test("ingested CSVs read straight into the S2 scan") {
     val dest = Files.createTempDirectory("graft-ingest-scan").toString
     Ingest.ingest(spark, metadata, dest, fetch).unpersist()
@@ -78,4 +99,14 @@ object IngestSpec {
   val fetch: Ingest.Fetch = url =>
     bodies(java.net.URLDecoder.decode(url, StandardCharsets.UTF_8))
       .getBytes(StandardCharsets.UTF_8)
+}
+
+/** The local filesystem under its own scheme name, for proving that a
+  * filesystem registered only through session conf reaches executors. */
+class SessionOnlyFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${SessionOnlyFileSystem.Scheme}:///")
+}
+
+object SessionOnlyFileSystem {
+  val Scheme = "graftsession"
 }

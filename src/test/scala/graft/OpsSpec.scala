@@ -113,8 +113,9 @@ class OpsSpec extends SparkSpec {
       .flatMap(_.listFiles).filter(_.getName.endsWith(".parquet"))
     assert(files.length == 2) // 1 coalesced task × 2 partition values
     assert(!new java.io.File(s"$tmp/tmp").exists) // temp cleaned up
-    val back = spark.read.parquet(s"$tmp/final")
+    val back = spark.read.parquet(s"$tmp/final").select("n", "p")
     assert(back.count() == 1000)
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
 
   test("BloomOps.sizedBits follows the optimal-bits formula and clamps") {

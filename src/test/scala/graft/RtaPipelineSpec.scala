@@ -75,6 +75,70 @@ class RtaPipelineSpec extends SparkSpec {
     assert(r.getAs[Int]("year") == 2021 && r.getAs[Int]("month") == 4)
   }
 
+  /** Etl1.stage over in-memory CSV lines, read like Etl1.run reads. */
+  private def stageOf(lines: String*) =
+    Etl1.stage(spark.read.option("header", true).option("inferSchema", true)
+      .csv((header +: lines).toDS()))
+
+  test("stage: newest raw row wins the dedup before the repair and the gate") {
+    val s = stageOf(
+      // TR101: the newest raw fromdate is an office string ("R" sorts
+      // above every digit), so that row wins the window; the repair
+      // nulls its fromdate and the gate drops the registration. The
+      // older, valid row must not take its place.
+      "1,TR101,01/02/2020,01/02/2035,OFFICE1,MARUTI,SWIFT VDI,PETROL,2019,RED,LMV,5",
+      "2,TR101,RTA HYDERABAD,01/02/2035,,MARUTI,SWIFT VDI,PETROL,2019,RED,LMV,5",
+      // TR102: fromdate tie → todate desc decides
+      "3,TR102,05/06/2021,05/06/2036,OFFICE1,KIA,SELTOS HTK,PETROL,2021,GREY,LMV,5",
+      "4,TR102,05/06/2021,05/06/2037,OFFICE1,KIA,SELTOS HTK,PETROL,2021,GREY,LMV,5",
+      // TR103: fromdate and todate tie → slno asc decides
+      "6,TR103,07/08/2021,07/08/2036,OFFICE2,HONDA,CITY ZX,PETROL,2018,BLACK,LMV,5",
+      "5,TR103,07/08/2021,07/08/2036,OFFICE2,HONDA,CITY ZX,PETROL,2018,BLACK,LMV,5")
+    val kept = s.select($"tempRegistrationNumber", $"slno").as[(String, Int)]
+      .collect().toMap
+    assert(kept == Map("TR102" -> 4, "TR103" -> 5))
+    // the private raw-fromdate copy never leaks; column order is fixed
+    assert(s.columns.toSeq == header.split(",").toSeq ++ Seq("modelDescClean",
+      "isTrailer", "isElectric", "modelWords", "modelName", "variant_words",
+      "variant", "fromdate_parsed", "todate_parsed", "fuel_clean", "year", "month"))
+  }
+
+  test("stage: a losing row's impossible date does not fail under ANSI") {
+    // parsing runs before the dedup, so it sees the losing duplicate too
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try {
+      val kept = stageOf(
+        "1,TR201,01/02/2021,01/02/2036,OFFICE1,MARUTI,SWIFT VDI,PETROL,2019,RED,LMV,5",
+        "2,TR201,00/00/0000,xx,RTA-DUP,DUP,DUP MODEL,DIESEL,1999,X,LMV,2")
+        .select($"tempRegistrationNumber", $"slno").as[(String, Int)].collect()
+      assert(kept.toSeq == Seq(("TR201", 1)))
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("Etl1.run: one parquet file per year=/month= directory, several writer tasks") {
+    val root = java.nio.file.Files.createTempDirectory("graft-etl1-files").toString
+    val csv = s"$root/raw.csv"
+    // 60 registrations over the 12 months of 2021, 5 per month
+    val lines = (0 until 60).map { i =>
+      f"$i,TRF$i%03d,${i % 28 + 1}%02d/${i % 12 + 1}%02d/2021,01/01/2036," +
+        "OFFICE1,MARUTI,SWIFT VDI,PETROL,2019,RED,LMV,5"
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
+      (header +: lines).mkString("\n"))
+    Etl1.run(spark, csv, s"$root/stage")
+    val monthDirs = new java.io.File(s"$root/stage").listFiles
+      .filter(_.getName.startsWith("year=")).flatMap(_.listFiles)
+      .filter(_.getName.startsWith("month="))
+    assert(monthDirs.length == 12)
+    val files = monthDirs.map(_.listFiles.filter(_.getName.endsWith(".parquet")))
+    assert(files.forall(_.length == 1), files.map(_.length).mkString(","))
+    // part-<task>-...: the directories were not all written by one task
+    assert(files.flatten.map(_.getName.split("-")(1)).distinct.length > 1)
+    assert(spark.read.parquet(s"$root/stage").count() == 60)
+  }
+
   test("gold: makeYear 2-digit fix + MANUFACTURER_DATE_ID") {
     val r = fact.filter($"TEMP_REGISTRATION_NUMBER" === "TR004").first()
     assert(r.getAs[Int]("MANUFACTURER_DATE_ID") == 20180101)
